@@ -3393,7 +3393,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     their only r11 delta is the same shared guard expression the seven
     in-window similarity queries re-certify, the guard is proven
     result-invariant bitwise (tests/test_kernels.py) and on the whole
-    surface by SELFCHECK (all 98 queries, both dispatch modes), and the
+    surface by SELFCHECK (all 98 queries), and the
     window has no free slot (the r08-debt class above outranks a
     change already certified eight times over). Tail: the r10-official
     queries, all byte-identical in default mode this round (the
@@ -3401,8 +3401,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     plans/r11/*_before vs *_after diffs on the record).
     tests/test_oracle_parity.py re-checks ALL entries every CI run
     regardless of the window, and tools/self_correctness.py records the
-    uncapped sweep in SELFCHECK.json (plus SELFCHECK_ARROW.json under
-    the production arrow dispatch) each round."""
+    uncapped sweep in SELFCHECK.json each round."""
     return {
         # (r11-0) canary — permanently first in window
         "gate_canary": _q_gate_canary,

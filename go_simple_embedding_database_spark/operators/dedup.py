@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from go_simple_embedding_database_spark.functions.text import (
-    ngrams_all_kernel, shingles, shingles_kernel, shingles_sql)
+    ngrams_all, shingles, shingles_sql)
 from go_simple_embedding_database_spark.operators.topk import similarity_join
 
 MERSENNE_P = 2147483647  # 2^31 - 1
@@ -295,7 +295,7 @@ def minhash_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     outnumber documents when boilerplate shares band buckets)."""
     cand = minhash_candidate_pairs(df, text_col, id_col, num_hashes, bands, n)
     sh = df.select(F.col(id_col),
-                   shingles_kernel(F.col(text_col), n).alias("_sh"))
+                   shingles(F.col(text_col), n).alias("_sh"))
     withs = (
         cand.join(sh.withColumnRenamed(id_col, "id_a")
                   .withColumnRenamed("_sh", "_sa"), "id_a")
@@ -353,7 +353,7 @@ def length_band_jaccard_dedup(df: DataFrame, text_col: str = "text",
     # Shingle ONCE per document — the verify stage reads these arrays back
     # by id instead of re-tokenizing per candidate pair (measured 20x).
     base = (df.select(id_col, *block_cols, band.alias("_band"),
-                      shingles_kernel(F.col(text_col), n).alias("_sh"))
+                      shingles(F.col(text_col), n).alias("_sh"))
             .localCheckpoint(eager=False))
     tok = base.select(id_col, *block_cols, "_band",
                       F.size("_sh").alias("_nsh"),
@@ -1005,7 +1005,7 @@ def containment_pairs(df: DataFrame, text_col: str = "text",
     from pyspark.sql import Window
 
     grams = df.select(F.col(id_col).alias("_id"),
-                      F.explode(shingles_kernel(F.col(text_col), n))
+                      F.explode(shingles(F.col(text_col), n))
                       .alias("_g"))
     # Document frequency as a count-over-gram window, not a separate
     # aggregate joined back: one shuffle on the gram produces the
@@ -1194,9 +1194,8 @@ def positional_spans(text: Column, n: int = 5) -> Column:
     >=50-token spans across a corpus are memorization fuel). This IS
     ``functions.text.ngrams_all`` (repetition scoring needs the same
     with-multiplicity grams) — delegated so the tokenization and the
-    short-document rule have exactly one definition (the _kernel form
-    rides the SPARK_GRAFT_TEXT_KERNEL dispatch)."""
-    return ngrams_all_kernel(text, n)
+    short-document rule have exactly one definition."""
+    return ngrams_all(text, n)
 
 
 def positional_spans_sql(expr: str, n: int = 5) -> str:
@@ -1336,12 +1335,12 @@ def probe_band_index(new_docs: DataFrame, band_index: DataFrame,
               .join(cand.select("_new_id").distinct(),
                     F.col(id_col) == F.col("_new_id"), "leftsemi")
               .select(F.col(id_col).alias("_new_id"),
-                      shingles_kernel(F.col(text_col), n).alias("_sa")))
+                      shingles(F.col(text_col), n).alias("_sa")))
     corp_sh = (corpus
                .join(cand.select("_corpus_id").distinct(),
                      F.col(id_col) == F.col("_corpus_id"), "leftsemi")
                .select(F.col(id_col).alias("_corpus_id"),
-                       shingles_kernel(F.col(text_col), n).alias("_sb")))
+                       shingles(F.col(text_col), n).alias("_sb")))
     scored = (cand.join(new_sh, "_new_id").join(corp_sh, "_corpus_id")
               .select(F.col("_new_id").alias("new_id"),
                       F.col("_corpus_id").alias("corpus_id"),

@@ -224,8 +224,7 @@ def ngram_novelty(docs: DataFrame, text_col: str = "text",
     Returns (id_col, n_grams, novelty) — novelty rounded to 6 decimals
     for cross-engine hash parity.
     """
-    from go_simple_embedding_database_spark.functions.text import (
-        shingles_kernel)
+    from go_simple_embedding_database_spark.functions.text import shingles
 
     # A doc with zero words produces the degenerate empty shingle ''
     # under Spark's shingles() short-doc rule, where the SQL twin's list
@@ -234,7 +233,7 @@ def ngram_novelty(docs: DataFrame, text_col: str = "text",
     # of nothing is undefined, not 1.0). Non-empty word slices can never
     # join to '', so no real gram is affected.
     grams = (docs.select(F.col(id_col).alias("_id"),
-                         F.explode(shingles_kernel(F.col(text_col), n))
+                         F.explode(shingles(F.col(text_col), n))
                          .alias("_g"))
              .filter(F.col("_g") != "")
              .localCheckpoint(eager=False))

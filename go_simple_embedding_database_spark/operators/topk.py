@@ -32,30 +32,6 @@ from go_simple_embedding_database_spark.functions.kernels import (
     cosine_pairs_kernel, cosine_scores_kernel)
 
 
-def _batch_scorer_mode() -> str:
-    """batch_topk scoring-form dispatch (round 11, guide §8 "move heavy
-    bytes once"): the ``pair`` form materializes the broadcast cross
-    join, so every record VECTOR crosses the scoring stage M times (once
-    per query) — at the production batch shape (M=100) that is 100× the
-    bytes the decision needs. ``record`` scores via mapInPandas over the
-    records alone with the collected query batch riding the closure:
-    each record vector is read ONCE and scored against all M queries
-    vectorized — bit-identical scores (the same strict left-fold op
-    sequence; pinned by tests/test_topk.py), ~M× less scoring-stage
-    input.
-
-    Default is ``record`` — unlike the cosine/text/kmeans kernel
-    dispatches, this one wins at BOTH measured shapes, so no crossover
-    split is needed: the gate shape (M=3, 20k rows, alternating
-    in-process A/B on the declared query) measured pair 0.82 s vs
-    record 0.66 s median, and the production shape (100×, M=100,
-    SCALE.json batch_scorer_ab) measured pair-HOF 91.0 s / pair-Arrow
-    11.4 s / record 2.68 s. ``SPARK_GRAFT_BATCH_SCORER=pair`` restores
-    the broadcast-cross-join form (comparison/fallback)."""
-    import os
-    return os.environ.get("SPARK_GRAFT_BATCH_SCORER", "record").lower()
-
-
 def _record_form_scores(records, queries, records_vec: str,
                         queries_vec: str, query_id: str, records_id: str,
                         score_col: str, tie_cols: list[str]):
@@ -66,7 +42,8 @@ def _record_form_scores(records, queries, records_vec: str,
     ``cosine_similarity`` (strict left fold per dim, vectorized across
     rows AND queries; den-before-dot on length mismatch; zero-norm → 0.0;
     NULL vector → NULL; NULL element → NaN per the kernel contract —
-    Arrow renders it NaN before the fold, exactly like the pair twins)."""
+    Arrow renders a record-side NULL element NaN before the fold, and a
+    query-side one is mapped to NaN here)."""
     import numpy as np
     import pandas as pd
 
@@ -76,7 +53,8 @@ def _record_form_scores(records, queries, records_vec: str,
     q_rows = queries.select(query_id, queries_vec).collect()
     qids = [r[0] for r in q_rows]
     qvecs = [None if r[1] is None else
-             np.asarray([float(v) for v in r[1]], dtype=np.float64)
+             np.asarray([float("nan") if v is None else float(v)
+                         for v in r[1]], dtype=np.float64)
              for r in q_rows]
     qnorm = [None if q is None else _fold_norm_block(q.reshape(1, -1))[0]
              for q in qvecs]
@@ -144,8 +122,6 @@ def _record_form_scores(records, queries, records_vec: str,
             .mapInPandas(score_batches, ", ".join(fields)))
 
 
-
-
 def bucketed_topk(scored: DataFrame, group_col: str, order: list[Column],
                   k: int, bucket_key: str,
                   buckets: int | None = None) -> DataFrame:
@@ -190,9 +166,6 @@ def topk_by_similarity(
     by the optimizer to satisfy the contract (scores still projected for
     the returned rows).
     """
-    # Arrow-vectorized bit-exact kernel (see functions/kernels.py):
-    # the HOF expression evaluates interpreted (~15 µs/row at dim=64);
-    # the closure form ships ONLY the record vector across the boundary.
     scored = records.withColumn(
         score_col, cosine_scores_kernel(F.col(vec_col), qvec)
     )
@@ -215,16 +188,18 @@ def batch_topk(
 ) -> DataFrame:
     """Top-k per query for a whole DataFrame of queries in ONE scan.
 
-    The query side rides with every task either way (queries are small
-    by construction — the working set of a request batch): in the
-    default ``record`` scoring form (round 11, see ``_batch_scorer_mode``)
-    the collected query batch travels in the mapInPandas closure and
-    each record VECTOR enters the scoring stage exactly once for all M
-    queries; in the ``pair`` form (env fallback, and the shape used when
-    ``records_id`` is absent or a tie column lives on the query side)
-    the queries are broadcast and the cross join materializes M pair
-    rows per record. The big records table is scanned once in both. The per-query selection is a TWO-stage window: stage 1
-    partitions by (query, bucket) so every query's candidates spread over
+    The query side rides with every task (queries are small by
+    construction — the working set of a request batch). With
+    ``records_id`` the collected query batch travels in a mapInPandas
+    closure and each record VECTOR enters the scoring stage exactly once
+    for all M queries (``_record_form_scores``); tie columns that live on
+    the query side are broadcast-joined onto the scored relation by
+    ``query_id``. Without ``records_id`` the queries are broadcast and a
+    cross join materializes M pair rows per record. The big records
+    table is scanned once in both.
+
+    The per-query selection is a TWO-stage window: stage 1 partitions by
+    (query, bucket) so every query's candidates spread over
     ``buckets`` tasks (a single ``partitionBy(query_id)`` window would
     funnel ALL N scored rows of a query through one task — an OOM/straggler
     at the 100 TB design point; AQE cannot split a window partition);
@@ -251,8 +226,6 @@ def batch_topk(
 
     if records_id is None:
         joined = records.crossJoin(F.broadcast(queries))
-        # Arrow-vectorized bit-exact kernel — the scored pair stream is
-        # the hot loop of every batch similarity scan (functions/kernels).
         scored = joined.withColumn(
             score_col,
             cosine_pairs_kernel(F.col(records_vec), F.col(queries_vec)))
@@ -265,22 +238,17 @@ def batch_topk(
                 .filter(F.col("_rn") <= k)
                 .drop("_rn", queries_vec))
 
-    tie_cols = [c for c in (tie_break or [])]
-    if (_batch_scorer_mode() == "record"
-            and all(c in records.columns for c in tie_cols)):
-        # Record form (§8): each record vector enters the scoring stage
-        # ONCE for all M queries instead of M times as pair rows.
-        slim = _record_form_scores(records, queries, records_vec,
-                                   queries_vec, query_id, records_id,
-                                   score_col, tie_cols)
-    else:
-        joined = records.crossJoin(F.broadcast(queries))
-        scored = joined.withColumn(
-            score_col,
-            cosine_pairs_kernel(F.col(records_vec), F.col(queries_vec)))
-        slim_cols = list(dict.fromkeys(
-            [query_id, records_id, score_col] + tie_cols))
-        slim = scored.select(*slim_cols)
+    tie_cols = tie_break or []
+    record_ties = [c for c in tie_cols if c in records.columns]
+    query_ties = [c for c in tie_cols
+                  if c not in records.columns and c != query_id]
+    # Record form (§8): each record vector enters the scoring stage ONCE
+    # for all M queries instead of M times as cross-joined pair rows.
+    slim = _record_form_scores(records, queries, records_vec, queries_vec,
+                               query_id, records_id, score_col, record_ties)
+    if query_ties:
+        slim = slim.join(F.broadcast(queries.select(query_id, *query_ties)),
+                         query_id)
     winners = bucketed_topk(slim, query_id, order, k, records_id, nb)
     if not attach_payload:
         return winners

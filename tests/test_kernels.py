@@ -142,18 +142,23 @@ def test_well_formed_vector_twins_agree_on_every_edge(spark):
     assert bool(d) is False
 
 
-def test_arrow_kernel_bitwise_matches_hof_kernel(spark):
-    """The Arrow-vectorized kernels (round-10 optimization) must be
-    BIT-IDENTICAL to the Catalyst HOF kernel on every well-formed edge:
-    identical/opposite/orthogonal vectors, zero norms, empty vectors,
-    NULL vectors, length mismatches, NaN/Inf values, float32 promotion,
-    and 64-dim vectors drawn from the real embeddings fixture shape.
-    struct.pack comparison — repr/round would hide last-ulp drift."""
+def test_cosine_kernels_bitwise_match_cosine_py(spark):
+    """The bulk kernels (cosine_pairs_kernel, cosine_scores_kernel) and
+    cosine_similarity must be BIT-IDENTICAL to the pure-Python reference
+    ``cosine_py`` on every well-formed edge: identical/opposite/orthogonal
+    vectors, zero norms, empty vectors, NaN/Inf values, float32
+    promotion, and 64-dim vectors of the embeddings fixture shape. NULL
+    vectors score NULL, and so do length mismatches unless one side has
+    zero norm (then 0.0). The kernels plan no Python
+    evaluation. struct.pack comparison — repr/round would hide last-ulp
+    drift."""
     import struct
 
     from go_simple_embedding_database_spark.functions.kernels import (
-        cosine_pairs_kernel, cosine_scores_kernel, cosine_similarity,
-        cosine_similarity_arrow, cosine_scores_arrow)
+        cosine_pairs_kernel, cosine_py, cosine_scores_kernel,
+        cosine_similarity)
+    from go_simple_embedding_database_spark.plans.explain_utils import (
+        formatted_plan)
 
     rows = [
         ([0.0, 1.0, 2.0, 3.0], [0.0, 1.0, 2.0, 3.0]),
@@ -174,77 +179,51 @@ def test_arrow_kernel_bitwise_matches_hof_kernel(spark):
     ]
     df = spark.createDataFrame(rows, "x array<double>, y array<double>")
 
+    def b(v):
+        return None if v is None else struct.pack("<d", v)
+
     def bits(col):
-        out = df.select(col.alias("s")).collect()
-        return [None if r.s is None
-                else struct.pack("<d", r.s) for r in out]
+        sel = df.select(col.alias("s"))
+        assert "EvalPython" not in formatted_plan(sel)
+        return [b(r.s) for r in sel.collect()]
 
-    hof = bits(cosine_similarity(F.col("x"), F.col("y")))
-    arrow = bits(cosine_similarity_arrow(F.col("x"), F.col("y")))
-    assert arrow == hof
+    def want(x, y):
+        if x is None or y is None:
+            return None
+        if len(x) != len(y):
+            # the den == 0.0 branch fires before the dot: a mismatch
+            # with a zero-norm side is 0.0, any other mismatch NULL
+            return b(0.0) if not any(x) or not any(y) else None
+        return b(cosine_py(x, y))
 
-    # closure (literal-query) form, incl. the zero-norm and NaN rows
+    expected = [want(x, y) for x, y in rows]
+    assert bits(cosine_similarity(F.col("x"), F.col("y"))) == expected
+    assert bits(cosine_pairs_kernel(F.col("x"), F.col("y"))) == expected
+    assert expected[5] is None and expected[6] is None \
+        and expected[7] is None
+
+    # literal-query form, incl. the zero-norm and NaN rows
     for q in ([1.0, 2.0], [0.0, 0.0], [float((i * 31 + 1) % 17) / 4.0
                                        for i in range(64)]):
-        hof_q = bits(cosine_similarity(
-            F.col("x"), F.array(*[F.lit(float(v)) for v in q])))
-        arrow_q = bits(cosine_scores_arrow(F.col("x"), q))
-        assert arrow_q == hof_q, q
+        assert bits(cosine_scores_kernel(F.col("x"), q)) == \
+            [want(x, q) for x, _ in rows], q
 
-    # float32 promotion parity
+    # float32 promotion: the kernel folds the f64 promotion of each f32
     f32 = spark.createDataFrame([([1.1, 2.2], [3.3, 4.4])],
                                 "x array<float>, y array<float>")
-    a = f32.select(cosine_similarity(F.col("x"), F.col("y")).alias("s")) \
-        .collect()[0].s
-    b = f32.select(cosine_similarity_arrow(F.col("x"), F.col("y"))
-                   .alias("s")).collect()[0].s
-    assert struct.pack("<d", a) == struct.pack("<d", b)
+    got = f32.select(cosine_pairs_kernel(F.col("x"), F.col("y"))
+                     .alias("s")).collect()[0].s
+    x32, y32 = (struct.unpack("<2f", struct.pack("<2f", *v))
+                for v in ([1.1, 2.2], [3.3, 4.4]))
+    assert b(got) == b(cosine_py(x32, y32))
 
 
-def test_kernel_dispatch_honors_env(spark, monkeypatch):
-    """cosine_pairs_kernel/cosine_scores_kernel: HOF by default (the
-    sf0.1 bench regime sits below the ~15k-rows/stage crossover), Arrow
-    when SPARK_GRAFT_COSINE_KERNEL=arrow (the production regime). Both
-    modes must plan (and agree) — the switch is a physical choice only."""
-    import struct
-
-    from go_simple_embedding_database_spark.functions.kernels import (
-        cosine_pairs_kernel, cosine_scores_kernel)
-    from go_simple_embedding_database_spark.plans.explain_utils import (
-        formatted_plan)
-
-    df = spark.createDataFrame([([1.0, 2.0], [2.0, 1.0])],
-                               "x array<double>, y array<double>")
-    monkeypatch.delenv("SPARK_GRAFT_COSINE_KERNEL", raising=False)
-    hof_col = cosine_pairs_kernel(F.col("x"), F.col("y"))
-    assert "EvalPython" not in formatted_plan(df.select(hof_col))
-    v_hof = df.select(hof_col.alias("s")).collect()[0].s
-
-    monkeypatch.setenv("SPARK_GRAFT_COSINE_KERNEL", "arrow")
-    arrow_col = cosine_pairs_kernel(F.col("x"), F.col("y"))
-    assert "ArrowEvalPython" in formatted_plan(df.select(arrow_col))
-    v_arrow = df.select(arrow_col.alias("s")).collect()[0].s
-    assert struct.pack("<d", v_hof) == struct.pack("<d", v_arrow)
-
-    # env is INTENTIONALLY still 'arrow' here: this draw exercises the
-    # scores kernel's arrow dispatch (ADVICE r10 — the old name v_hof_q
-    # misdescribed it, inviting a reorder that would drop the coverage)
-    v_arrow_q = df.select(
-        cosine_scores_kernel(F.col("x"), [1.0, 0.5]).alias("s")) \
-        .collect()[0].s
-    monkeypatch.delenv("SPARK_GRAFT_COSINE_KERNEL")
-    v_hof_q = df.select(
-        cosine_scores_kernel(F.col("x"), [1.0, 0.5]).alias("s")) \
-        .collect()[0].s
-    assert struct.pack("<d", v_arrow_q) == struct.pack("<d", v_hof_q)
-
-
-def test_null_element_vectors_agree_in_both_modes(spark, monkeypatch):
-    """Round-11 closure of the r10 'KNOWN EDGE': a NULL element inside a
-    vector scores NaN under BOTH kernel modes (module docstring's
-    NULL-element convention), so SPARK_GRAFT_COSINE_KERNEL is a pure
-    physical-plan choice on EVERY input, malformed ones included. NULL
-    vectors and length mismatches keep their NULL/0.0 semantics."""
+def test_null_element_vectors_score_nan(spark):
+    """A NULL element inside an otherwise well-formed vector scores NaN
+    (module docstring's NULL-element convention) — the value the
+    record-form batch_topk scorer gets from Arrow, so every scoring
+    path agrees. NULL vectors and length mismatches keep their NULL/0.0
+    semantics."""
     import math
 
     from go_simple_embedding_database_spark.functions.kernels import (
@@ -259,22 +238,19 @@ def test_null_element_vectors_agree_in_both_modes(spark, monkeypatch):
         ([1.0, 2.0, 3.0], [1.0, 1.0, 1.0]),     # well-formed control
     ]
     df = spark.createDataFrame(rows, "x array<double>, y array<double>")
-
-    def sample():
-        out = df.select(
-            cosine_pairs_kernel(F.col("x"), F.col("y")).alias("p"),
-            cosine_scores_kernel(F.col("x"), [1.0, 1.0, 1.0]).alias("q"),
-        ).collect()
-        return [("nan" if isinstance(v, float) and math.isnan(v) else v)
-                for r in out for v in (r.p, r.q)]
-
-    monkeypatch.delenv("SPARK_GRAFT_COSINE_KERNEL", raising=False)
-    hof = sample()
-    monkeypatch.setenv("SPARK_GRAFT_COSINE_KERNEL", "arrow")
-    arrow = sample()
-    assert hof == arrow
-    # the formerly-divergent case is now NaN in both modes
-    assert hof[0] == "nan" and hof[2] == "nan"
-    # NULL vector stays NULL; zero-norm-side mismatch stays 0.0 (row 3's
-    # scores draw: [0.0, 0.0] vs the 3-dim literal query)
-    assert hof[8] is None and hof[7] == 0.0
+    out = df.select(
+        cosine_pairs_kernel(F.col("x"), F.col("y")).alias("p"),
+        cosine_scores_kernel(F.col("x"), [1.0, 1.0, 1.0]).alias("q"),
+    ).collect()
+    got = [("nan" if isinstance(v, float) and math.isnan(v) else v)
+           for r in out for v in (r.p, r.q)]
+    # (pairs, scores) per row
+    assert got[0:2] == ["nan", "nan"]
+    assert got[2:4] == ["nan", pytest.approx(1.0)]
+    assert got[4:6] == [None, None]
+    # zero-norm x against the 3-dim literal: the den == 0.0 branch fires
+    # before the dot, so the mismatch scores 0.0; against y the NULL
+    # element poisons the denominator and the mismatch stays NULL
+    assert got[6:8] == [None, 0.0]
+    assert got[8:10] == [None, None]
+    assert got[10:12] == [pytest.approx(6 / math.sqrt(14 * 3))] * 2

@@ -73,21 +73,42 @@ def test_similarity_join_threshold_only(spark, embeddings):
     assert out.filter(F.col("left_id") == F.col("right_id")).count() == 5
 
 
-def test_batch_topk_record_scorer_bitwise_parity(spark, embeddings,
-                                                 monkeypatch):
-    """Round-11 record-form scorer (SPARK_GRAFT_BATCH_SCORER=record, the
-    §8 move-heavy-bytes-once shape): the slim scored relation is
-    bit-identical to the pair form over EVERY (record, query) pair —
-    including NULL vectors, NULL elements (NaN per the kernel contract),
-    length mismatches and zero norms — and the winners match. Default
-    stays the pair form (plan unchanged); record mode plans MapInPandas
-    and no cross join before the window."""
+def _ranked_winners(rows, k):
+    """Top-k (query_id, vec_id, score) per query from scored
+    (query_id, vec_id, score) rows, sorted in Python by Spark's
+    ``desc(score), asc(vec_id)`` order: NaN ranks above every number and
+    NULL scores rank last."""
+    import math
+
+    def key(r):
+        s = r[2]
+        if s is None:
+            return (2, 0.0, r[1])
+        if math.isnan(s):
+            return (0, 0.0, r[1])
+        return (1, -s, r[1])
+
+    by_q: dict = {}
+    for r in sorted(rows, key=key):
+        by_q.setdefault(r[0], []).append(r)
+    return sorted(r for rs in by_q.values() for r in rs[:k])
+
+
+def test_batch_topk_record_scorer_bitwise_parity(spark, embeddings):
+    """The record-form scorer (the only batch_topk scorer once
+    ``records_id`` is set): the slim scored relation is bit-identical to
+    an independent reference — the cross join scored by
+    ``cosine_pairs_kernel`` — over EVERY (record, query) pair, including
+    NULL vectors, NULL elements on either side (NaN per the kernel
+    contract), length mismatches and zero norms. End-to-end winners
+    match that reference ranked in Python by (score desc, vec_id), and
+    the plan scores via MapInPandas."""
     import struct
 
     from go_simple_embedding_database_spark.functions.kernels import (
         cosine_pairs_kernel)
     from go_simple_embedding_database_spark.operators.topk import (
-        _record_form_scores, batch_topk)
+        _record_form_scores)
 
     base = embeddings.select("vec_id", F.col("embedding")
                              .cast("array<double>").alias("embedding"))
@@ -100,36 +121,67 @@ def test_batch_topk_record_scorer_bitwise_parity(spark, embeddings,
                .select(F.col("vec_id").alias("query_id"),
                        F.col("embedding").alias("query_embedding"))
                .unionByName(spark.createDataFrame(
-                   [(80001, None), (80002, [1.0, 0.0])],
+                   [(80001, None), (80002, [1.0, 0.0]),
+                    (80003, [1.0, None])],
                    "query_id long, query_embedding array<double>")))
 
     def b(x):
         return None if x is None else struct.pack("<d", x)
 
-    monkeypatch.delenv("SPARK_GRAFT_BATCH_SCORER", raising=False)
-    pair = {(r.query_id, r.vec_id): b(r.s) for r in
-            records.crossJoin(F.broadcast(queries)).select(
-                "query_id", "vec_id",
-                cosine_pairs_kernel(F.col("embedding"),
-                                    F.col("query_embedding")).alias("s"))
-            .collect()}
+    ref_rows = [tuple(r) for r in
+                records.crossJoin(F.broadcast(queries)).select(
+                    "query_id", "vec_id",
+                    cosine_pairs_kernel(F.col("embedding"),
+                                        F.col("query_embedding"))
+                    .alias("s")).collect()]
+    ref = {(q, v): b(s) for q, v, s in ref_rows}
     rec_slim = _record_form_scores(
         records, queries, "embedding", "query_embedding", "query_id",
         "vec_id", "s", [])
     rec = {(r.query_id, r.vec_id): b(r.s) for r in rec_slim.collect()}
-    assert rec == pair and len(rec) == records.count() * queries.count()
+    assert rec == ref and len(rec) == records.count() * queries.count()
 
-    # end-to-end winners + dispatch plan shape
-    pw = sorted(map(tuple, batch_topk(
-        records, queries, 3, score_col="sim", tie_break=["vec_id"],
-        records_id="vec_id").select("query_id", "vec_id", "sim")
-        .collect()))
-    monkeypatch.setenv("SPARK_GRAFT_BATCH_SCORER", "record")
     rdf = batch_topk(records, queries, 3, score_col="sim",
                      tie_break=["vec_id"], records_id="vec_id")
-    rw = sorted(map(tuple, rdf.select("query_id", "vec_id", "sim")
-                    .collect()))
-    plan = formatted_plan(rdf)
-    assert "MapInPandas" in plan
-    assert [(a, c, b(s)) for a, c, s in pw] == \
-           [(a, c, b(s)) for a, c, s in rw]
+    assert "MapInPandas" in formatted_plan(rdf)
+    got = sorted(map(tuple, rdf.select("query_id", "vec_id", "sim")
+                     .collect()))
+    want = _ranked_winners(ref_rows, 3)
+    assert [(q, v, b(s)) for q, v, s in got] == \
+           [(q, v, b(s)) for q, v, s in want]
+
+
+def test_batch_topk_query_side_tie_columns(spark, embeddings):
+    """Tie columns that live on the QUERY side ride along with the
+    record-form scorer: the query's columns are joined onto the scored
+    relation, the winners match a Python ``cosine_py`` ranking by
+    (score desc, vec_id), and both the slim and the payload outputs
+    carry the query-side column."""
+    from go_simple_embedding_database_spark.functions.kernels import (
+        cosine_py)
+
+    recs = [(r.vec_id, [float(v) for v in r.embedding])
+            for r in embeddings.filter(F.col("vec_id") < 40).collect()]
+    # duplicated vectors under new ids force exact score ties
+    recs += [(1000 + vid, vec) for vid, vec in recs[:5]]
+    records = spark.createDataFrame(recs,
+                                    "vec_id long, embedding array<double>")
+    qs = [(7, 70, recs[0][1]), (8, 80, recs[3][1])]
+    queries = spark.createDataFrame(
+        qs, "query_id long, q_rank long, query_embedding array<double>")
+    want = _ranked_winners(
+        [(qid, vid, cosine_py(vec, qv)) for qid, _, qv in qs
+         for vid, vec in recs], 4)
+
+    slim = batch_topk(records, queries, 4, score_col="sim",
+                      tie_break=["q_rank", "vec_id"], records_id="vec_id",
+                      attach_payload=False)
+    got = sorted((r.query_id, r.vec_id, r.sim, r.q_rank)
+                 for r in slim.collect())
+    assert got == [(q, v, s, 10 * q) for q, v, s in want]
+
+    full = batch_topk(records, queries, 4, score_col="sim",
+                      tie_break=["q_rank", "vec_id"], records_id="vec_id")
+    got = sorted((r.query_id, r.vec_id, r.sim, r.q_rank)
+                 for r in full.collect())
+    assert got == [(q, v, s, 10 * q) for q, v, s in want]
