@@ -1,6 +1,5 @@
-"""Vector kernels: Catalyst higher-order-function expressions, the
-left-fold numpy helpers the record-form scorer uses, and a pure-Python
-reference.
+"""Vector kernels: Catalyst higher-order-function expressions, one numpy
+block scorer, and a pure-Python reference.
 
 Reference parity: ``CosineSimilarity`` (/root/reference/utils/utils.go:9-24):
   cos(x,y) = Σ xᵢyᵢ / (‖x‖·‖y‖)
@@ -17,8 +16,12 @@ One evaluator per operation:
 - ``cosine_pairs_kernel`` / ``cosine_scores_kernel`` — the bulk scoring
   forms (operators.topk, operators.ann): ``cosine_similarity`` plus the
   NULL-element convention below.
-- ``cosine_py`` — the bit-exact pure-Python reference used on tiny
-  driver-side relations and by the tests.
+- ``cosine_block`` — the numpy batch scorer: N record vectors against M
+  query vectors with the kernel's exact per-pair op sequence. It runs
+  inside ``batch_topk``'s record-form ``mapInPandas`` and on the driver
+  where ``ivf_query_index_batch`` ranks centroids against a query batch.
+- ``cosine_py`` — the bit-exact pure-Python reference the tests compare
+  every other evaluator against; no package code calls it.
 
 NULL-element convention: a NULL *element* inside an otherwise
 well-formed vector scores **NaN** (the fold alone would give NULL). The
@@ -105,11 +108,6 @@ def cosine_similarity(x: Column, y: Column, *, strict: bool = False) -> Column:
     return sim
 
 
-def _stack_f64(vals: list) -> "np.ndarray":
-    return np.stack(vals).astype(np.float64, copy=False) if vals else \
-        np.empty((0, 0))
-
-
 def _fold_norm_block(X: "np.ndarray") -> "np.ndarray":
     """sqrt(Σ x²) per row with the kernel's left-fold association order."""
     acc = np.zeros(X.shape[0])
@@ -117,6 +115,56 @@ def _fold_norm_block(X: "np.ndarray") -> "np.ndarray":
         xd = X[:, d]
         acc = acc + xd * xd
     return np.sqrt(acc)
+
+
+def cosine_block(xs, qs) -> tuple["np.ndarray", "np.ndarray"]:
+    """Score every (record, query) pair: ``xs`` holds N record vectors,
+    ``qs`` M query vectors; each vector is a sequence of numbers or
+    None. Returns ``(vals, mask)``, both N × M: ``mask`` marks SQL NULL
+    scores, and ``vals`` holds every other score, NaN included.
+
+    Same result as ``cosine_pairs_kernel`` on every pair, bit for bit.
+    Records are grouped by length and each group is scored as one
+    block: a strict left fold per dimension, vectorized across the
+    group's rows (numpy's pairwise-summation ``dot`` would round
+    differently). Record-side norms are folded once per record, which
+    gives the same bits as the per-pair fold. The rules, per pair:
+    NULL element → NaN (it enters the fold as NaN); NULL vector on
+    either side → NULL; length mismatch → 0.0 when a norm is zero (the
+    den == 0.0 branch fires before the dot), else NULL; zero norm →
+    0.0."""
+    n, m = len(xs), len(qs)
+    vals = np.zeros((n, m), dtype=np.float64)
+    mask = np.zeros((n, m), dtype=bool)
+    qv = [None if q is None else np.asarray(q, dtype=np.float64) for q in qs]
+    qnorm = [None if q is None else _fold_norm_block(q.reshape(1, -1))[0]
+             for q in qv]
+    groups: dict[int, list[int]] = {}
+    for i, x in enumerate(xs):
+        if x is None:
+            mask[i, :] = True
+        else:
+            groups.setdefault(len(x), []).append(i)
+    for dx, idxs in groups.items():
+        ii = np.asarray(idxs)
+        X = np.asarray([xs[i] for i in idxs], dtype=np.float64)
+        nxs = _fold_norm_block(X)
+        for j, q in enumerate(qv):
+            if q is None:
+                mask[ii, j] = True
+                continue
+            den = nxs * qnorm[j]
+            if len(q) != dx:
+                zero = den == 0.0
+                vals[ii[zero], j] = 0.0
+                mask[ii[~zero], j] = True
+                continue
+            dot = np.zeros(len(ii))
+            for d in range(dx):
+                dot = dot + X[:, d] * q[d]
+            with np.errstate(divide="ignore", invalid="ignore"):
+                vals[ii, j] = np.where(den == 0.0, 0.0, dot / den)
+    return vals, mask
 
 
 def _null_element_to_nan(sim: Column, x: Column, y: Column) -> Column:
@@ -161,9 +209,8 @@ def cosine_scores_kernel(vec: Column, qvec: list[float]) -> Column:
 
 
 def cosine_py(x: list[float], y: list[float]) -> float:
-    """Bit-exact pure-Python twin of ``cosine_similarity`` for TINY
-    driver-side relations (ranking a handful of IVF centroids against a
-    query batch — ``operators.ann.ivf_query_index_batch``).
+    """Bit-exact pure-Python twin of ``cosine_similarity`` — the
+    reference the tests score every other evaluator against.
 
     Exactness argument: the Catalyst kernel is a sequential left fold of
     correctly-rounded f64 ops (``aggregate`` over ``zip_with`` — each

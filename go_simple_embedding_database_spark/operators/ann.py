@@ -21,13 +21,15 @@ from __future__ import annotations
 import json
 import os
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StructField, StructType
 
 from go_simple_embedding_database_spark.functions.kernels import (
-    cosine_pairs_kernel, cosine_scores_kernel)
-from go_simple_embedding_database_spark.operators.topk import topk_by_similarity
+    cosine_block, cosine_pairs_kernel, cosine_scores_kernel)
+from go_simple_embedding_database_spark.operators.topk import (
+    bucketed_topk, topk_by_similarity)
 
 
 def deterministic_centroids(df: DataFrame, k: int, vec_col: str = "embedding",
@@ -56,32 +58,12 @@ def kmeans_centroids(df: DataFrame, k: int, vec_col: str = "embedding",
     return centers
 
 
-def assign_cells(df: DataFrame, centroids: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    """IVF index build: every vector gets its nearest (max-cosine) centroid
-    id as ``cell``. One scan, centroids broadcast, no shuffle of the data
-    side; at scale, write the result partitioned by ``cell``.
-
-    A synthetic per-row id anchors the argmax window: windowing by the
-    row's columns would collapse byte-identical duplicate rows (no unique
-    id is exactly the case this variant serves) into one output row,
-    silently dropping records from the index."""
-    tagged = df.withColumn("_rowid", F.monotonically_increasing_id())
-    c = F.broadcast(centroids)
-    scored = tagged.crossJoin(c).withColumn(
-        "_csim", cosine_pairs_kernel(F.col(vec_col), F.col("centroid"))
-    )
-    w = Window.partitionBy("_rowid").orderBy(F.desc("_csim"), F.asc("centroid_id"))
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select(*df.columns, F.col("centroid_id").alias("cell"))
-    )
-
-
 def assign_cells_by_id(df: DataFrame, centroids: DataFrame, id_col: str,
                        vec_col: str = "embedding") -> DataFrame:
-    """Same as assign_cells but partitions the argmax window by the (known
-    unique) id column — cheaper than whole-row identity."""
+    """IVF index build: every vector gets its nearest (max-cosine) centroid
+    id as ``cell``. One scan, centroids broadcast, no shuffle of the data
+    side; the argmax window is partitioned by the (known unique) id
+    column. At scale, write the result partitioned by ``cell``."""
     c = F.broadcast(centroids)
     scored = df.crossJoin(c).withColumn(
         "_csim", cosine_pairs_kernel(F.col(vec_col), F.col("centroid"))
@@ -331,45 +313,50 @@ def ivf_query_index(spark, path: str, qvec: list[float], k: int,
                               score_col=score_col, tie_break=[id_col])
 
 
-# Driver-side centroid ranking runs kernels.cosine_py — pure Python,
-# deliberately (bit-exact left fold; numpy's pairwise summation rounds
-# differently), which makes it ~100x slower per element than numpy.
-# Above this |centroids| * |queries| * dim element-op budget (~a few
-# hundred ms of single-threaded driver compute) the ranking falls back
-# to the Spark batch_topk path: same kernel semantics (cosine_py is the
-# bit-exact twin of the Catalyst kernel), same total order (score desc,
-# centroid_id asc), so the probe sets are identical — pinned by
-# tests/test_ann.py::test_ivf_batch_driver_and_spark_ranking_agree.
-IVF_DRIVER_RANK_MAX_OPS = 2_000_000
+def _rank_probe_pairs(cent_rows, q_rows, nprobe: int, query_id: str,
+                      queries_vec: str) -> list[tuple]:
+    """(query id, centroid id) probe pairs: each query's ``nprobe`` best
+    centroids, in the order Spark's ``desc(score), asc(centroid_id)``
+    sort gives (the per-query path's tie order). Scores come from
+    ``kernels.cosine_block``, bit-identical to the Catalyst kernel, so
+    malformed vectors score as they do there: NaN ranks first, a NULL
+    score last, and -0.0 ties with 0.0."""
+    # np.lexsort is stable: with the centroids in ascending id order,
+    # equal (class, score) keys keep that order — the asc(centroid_id)
+    # tie-break
+    cent_rows = sorted(cent_rows, key=lambda r: r["centroid_id"])
+    cids = [r["centroid_id"] for r in cent_rows]
+    vals, mask = cosine_block([r["centroid"] for r in cent_rows],
+                              [r[queries_vec] for r in q_rows])
+    # rank class: 0 = NaN, 1 = number, 2 = NULL; within class 1 the
+    # negated score sorts descending (numpy compares -0.0 == 0.0)
+    cls = np.where(mask, 2, np.where(np.isnan(vals), 0, 1))
+    neg = np.where(cls == 1, -vals, 0.0)
+    ranks = np.lexsort((neg, cls), axis=0)[:nprobe]
+    return [(qr[query_id], cids[i])
+            for j, qr in enumerate(q_rows) for i in ranks[:, j]]
 
 
 def ivf_query_index_batch(spark, path: str, queries: DataFrame, k: int,
                           nprobe: int = 2, vec_col: str = "embedding",
                           id_col: str = "vec_id", score_col: str = "score",
                           query_id: str = "query_id",
-                          queries_vec: str = "query_embedding",
-                          driver_rank_max_ops: int | None = None) -> DataFrame:
+                          queries_vec: str = "query_embedding") -> DataFrame:
     """Query a materialized IVF index for a WHOLE batch of queries with
     ONE pruned read of the cells table.
 
     The per-query ``ivf_query_index`` opens its nprobe cell partitions
     per call — M queries cost M reads. Here: (1) centroids are ranked
-    against every query ON THE DRIVER — both relations are tiny by
-    construction (an IVF centroid table is the index's in-memory routing
-    layer; the query batch is a request working set), and the partition-
-    pruned cells read below needs the probe list driver-side anyway, so
-    a Spark job here would buy distribution nobody needs at the price of
-    a whole scheduler round-trip (measured ~1 s of the ann_recall gate
-    query at sf0.1 — VERDICT r03 #3). ``kernels.cosine_py`` is the
-    bit-exact fold twin of the Catalyst kernel and the sort key is the
-    per-query path's exact tie order (score desc, centroid_id asc), so
-    probe sets are identical (pinned by
-    tests/test_ann.py::test_ivf_query_index_batch_equals_per_query).
-    SCALE GATE: above ``IVF_DRIVER_RANK_MAX_OPS`` element-ops
-    (|centroids| * |queries| * dim — a real IVF's 10^3-10^4 centroids
-    times a 10^3-query batch would be MINUTES of single-threaded
-    driver Python) the ranking runs as a Spark ``batch_topk`` over the
-    centroid relation instead, bit-identically;
+    against every query ON THE DRIVER — the centroid table is the
+    index's in-memory routing layer, the query batch is a request
+    working set that the broadcast below ships through the driver
+    anyway, and the partition-pruned cells read needs the probe list
+    driver-side, so a Spark job here would buy distribution nobody needs
+    at the price of a whole scheduler round-trip (measured ~1 s of the
+    ann_recall gate query at sf0.1 — VERDICT r03 #3). The ranking is
+    ``_rank_probe_pairs``: ``kernels.cosine_block`` scores and the
+    per-query path's exact tie order, so probe sets are identical
+    (pinned by tests/test_ann.py::test_ivf_query_index_batch_equals_per_query);
     (2) the cells table is read ONCE filtered to the UNION
     of probed cells (still partition pruning — `cell IN (...)` at the
     file-listing level); (3) a broadcast (query, cell) pair relation
@@ -380,95 +367,31 @@ def ivf_query_index_batch(spark, path: str, queries: DataFrame, k: int,
     Returns (query columns, index row columns, score_col) — exactly the
     rows the per-query path returns for each query, one plan.
     """
-    from pyspark.sql.types import StructField, StructType
-
-    from go_simple_embedding_database_spark.functions.kernels import cosine_py
-    from go_simple_embedding_database_spark.operators.topk import bucketed_topk
-
-    centroids_df = (spark.read.parquet(f"{path}/centroids")
-                    .select("centroid_id", "centroid"))
-    cent_rows = centroids_df.collect()
-    dim = len(cent_rows[0]["centroid"]) if cent_rows else 0
-    budget = (IVF_DRIVER_RANK_MAX_OPS if driver_rank_max_ops is None
-              else driver_rank_max_ops)
-    pair_df = None
-    if not cent_rows:
-        # Empty index: nothing can be probed — the empty relation is the
-        # correct result, decided BEFORE touching the query batch. With
-        # |C| = 0 the ops budget below degenerates to max_q = budget, and
-        # the capped collect would pull up to budget + 1 query rows just
-        # to return nothing (ADVICE r05).
-        pairs, probed_cells = [], []
-    else:
-        # The budget also bounds what the driver MATERIALIZES: collect at
-        # most max_q + 1 query rows (one extra to detect overflow) rather
-        # than the whole batch — a gate that first pulled all of |Q| to
-        # the driver to decide |Q| is too big would defeat itself.
-        max_q = budget // max(1, len(cent_rows) * dim)
-        q_rows = (queries.select(query_id, queries_vec)
-                  .limit(max_q + 1).collect()) if max_q > 0 else []
-        if q_rows and len(q_rows) <= max_q:
-            pairs = []
-            for qr in q_rows:
-                ranked = sorted(
-                    ((cosine_py(qr[queries_vec], cr["centroid"]),
-                      cr["centroid_id"])
-                     for cr in cent_rows),
-                    key=lambda t: (-t[0], t[1]))
-                pairs.extend(
-                    (qr[query_id], cid) for _, cid in ranked[:nprobe])
-            probed_cells = sorted({c for _, c in pairs})
-        elif not q_rows and max_q > 0:
-            # empty query batch, proven by the capped collect — the empty
-            # relation is the correct result; skip the Spark ranking job
-            pairs, probed_cells = [], []
-        else:
-            # scale fallback: identical ranking as a Spark job — the
-            # Catalyst kernel is cosine_py's bit-exact twin and the order
-            # (score desc, centroid_id asc) matches, so the probe pairs
-            # are the ones the Python loop would produce. The winner pair
-            # relation STAYS a DataFrame (checkpointed — it feeds both
-            # the distinct-cells pull and the candidate join;
-            # unmaterialized, the ranking would run twice). What the gate
-            # bounds is driver CPU: the single-threaded |C| * |Q| * dim
-            # ranking loop never runs above budget, and the only
-            # driver-side RESULT materialization is the distinct probed
-            # cells (≤ |C|) pulled for partition pruning. It does NOT
-            # bound broadcast memory — F.broadcast(pair_df) below still
-            # builds the |Q| * nprobe pair relation through the driver
-            # (as any broadcast does), and F.broadcast(queries) ships the
-            # query batch, both inherent to the broadcast-join plan shape
-            # (a request working set, not a data-scale relation).
-            from go_simple_embedding_database_spark.operators.topk import (
-                batch_topk)
-            pair_df = batch_topk(
-                centroids_df, queries.select(query_id, queries_vec),
-                nprobe, records_vec="centroid", queries_vec=queries_vec,
-                query_id=query_id, tie_break=["centroid_id"],
-                records_id="centroid_id", attach_payload=False) \
-                .select(query_id, F.col("centroid_id").alias("cell")) \
-                .localCheckpoint(eager=False)
-            probed_cells = sorted(
-                r.cell for r in pair_df.select("cell").distinct().collect())
+    cent_rows = (spark.read.parquet(f"{path}/centroids")
+                 .select("centroid_id", "centroid").collect())
+    # Empty index: nothing can be probed — the empty relation is the
+    # correct result, decided BEFORE touching the query batch.
+    pairs = _rank_probe_pairs(
+        cent_rows, queries.select(query_id, queries_vec).collect(), nprobe,
+        query_id, queries_vec) if cent_rows else []
+    probed_cells = sorted({c for _, c in pairs})
     # Empty probe set (empty query batch OR empty index): isin([]) is
     # unbuildable; the empty relation is the correct result either way.
     cell_filter = (F.col("cell").isin(probed_cells) if probed_cells
                    else F.lit(False))
     cells = _read_cells(spark, path).filter(cell_filter)
-    if pair_df is None:
-        # Explicit schema (not inference): an EMPTY query batch must
-        # yield an empty result, and schema inference raises on an
-        # empty row list.
-        pair_schema = StructType([
-            StructField(query_id, queries.schema[query_id].dataType),
-            StructField("cell", cells.schema["cell"].dataType),
-        ])
-        pair_df = spark.createDataFrame(pairs, pair_schema)
+    # Explicit schema (not inference): an EMPTY query batch must yield an
+    # empty result, and schema inference raises on an empty row list.
+    pair_schema = StructType([
+        StructField(query_id, queries.schema[query_id].dataType),
+        StructField("cell", cells.schema["cell"].dataType),
+    ])
+    pair_df = spark.createDataFrame(pairs, pair_schema)
     scored = (cells.join(F.broadcast(pair_df), "cell")
               .join(F.broadcast(queries), query_id)
               .withColumn(score_col, cosine_pairs_kernel(
                   F.col(vec_col), F.col(queries_vec))))
-    return bucketed_topk(scored, query_id,
+    return bucketed_topk(scored, [query_id],
                          [F.desc(score_col), F.asc(id_col)], k,
                          id_col).drop(queries_vec)
 

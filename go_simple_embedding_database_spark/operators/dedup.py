@@ -88,14 +88,6 @@ def exact_dedup_keep(df: DataFrame, content_col: str = "text",
 
 # -- MinHash + LSH -------------------------------------------------------------
 
-def shingle_hashes(text: Column, n: int = 3) -> Column:
-    """array<bigint>: base hash per distinct word-n-gram shingle."""
-    return F.transform(
-        shingles(text, n),
-        lambda s: F.conv(F.substring(F.md5(s.cast("binary")), 1, 8), 16, 10).cast("bigint"),
-    )
-
-
 def shingle_hashes_sql(expr: str, n: int = 3) -> str:
     return (
         f"list_transform({shingles_sql(expr, n)}, "
@@ -115,12 +107,12 @@ def _shingle_hashes_py(text: str, n: int) -> "np.ndarray":
 
 def minhash_signature(text: Column, num_hashes: int = 12, n: int = 3) -> Column:
     """array<bigint> of length num_hashes: min over shingles of each family
-    hash — identical values to ``minhash_signature_expr`` / the DuckDB twin.
+    hash — identical values to the DuckDB twin ``minhash_signature_sql``.
 
     Implemented as an Arrow-batched pandas_udf: the recipe needs one md5
     per shingle, and hashlib's C md5 + one numpy (S × H) modmul is ~20×
-    faster than the interpreted md5/conv/substring HOF tree (measured
-    20.3s → ~1s for 500 docs × 12 hashes); the expression variant cannot
+    faster than an interpreted md5/conv/substring HOF tree (measured
+    20.3s → ~1s for 500 docs × 12 hashes); that expression form cannot
     whole-stage-codegen so "UDFs are the slow path" loses to measurement
     here, exactly as with the mock-hash embedder."""
     params = _minhash_params(num_hashes)
@@ -135,8 +127,8 @@ def minhash_signature(text: Column, num_hashes: int = 12, n: int = 3) -> Column:
             if hs.size == 0:
                 # zero shingles (NULL/blank doc, r10 convention): the
                 # min over an empty set is NULL per hash — identical to
-                # array_min([]) in the expr twin and list_min([]) in
-                # the DuckDB twin (and a crash in numpy otherwise).
+                # list_min([]) in the DuckDB twin (and a crash in numpy
+                # otherwise).
                 out.append([None] * num_hashes)
                 continue
             # products < 2^63: hs < 2^32, a < 2^31 — no int64 overflow.
@@ -146,22 +138,6 @@ def minhash_signature(text: Column, num_hashes: int = 12, n: int = 3) -> Column:
         return pd.Series(out)
 
     return _sig(text)
-
-
-def minhash_signature_expr(text: Column, num_hashes: int = 12, n: int = 3) -> Column:
-    """Pure-Catalyst variant of ``minhash_signature`` (no Python in the
-    plan) — kept for plan-purity comparison; see minhash_signature for why
-    it is not the default."""
-    hs = shingle_hashes(text, n)
-
-    def fam(a: int, b: int):
-        return lambda x: (F.lit(a) * x + F.lit(b)) % MERSENNE_P
-
-    mins = [
-        F.array_min(F.transform(hs, fam(a, b)))
-        for a, b in _minhash_params(num_hashes)
-    ]
-    return F.array(*mins)
 
 
 def minhash_signature_sql(expr: str, num_hashes: int = 12, n: int = 3) -> str:
@@ -520,17 +496,6 @@ def _shingle_hashes60_py(text: str, n: int) -> "np.ndarray":
     )
 
 
-def shingle_hashes60(text: Column, n: int = 3) -> Column:
-    """array<bigint>: 60-bit base hash per shingle (Catalyst twin of
-    ``_shingle_hashes60_py``)."""
-    return F.transform(
-        shingles(text, n),
-        lambda s: F.conv(
-            F.substring(F.md5(s.cast("binary")), 1, _SIMHASH_HEX_CHARS),
-            16, 10).cast("bigint"),
-    )
-
-
 def shingle_hashes60_sql(expr: str, n: int = 3) -> str:
     return (
         f"list_transform({shingles_sql(expr, n)}, "
@@ -546,7 +511,7 @@ def simhash(text: Column, n: int = 3) -> Column:
     Arrow-batched pandas_udf for the same reason as ``minhash_signature``:
     60 interpreted per-bit folds over the shingle array cannot codegen
     (measured 13.7s → ~1s for 500 docs at 32 bits); values are identical
-    to ``simhash_expr`` and the DuckDB twin."""
+    to the DuckDB twin ``simhash_sql``."""
     bit_idx = np.arange(SIMHASH_BITS, dtype=np.int64)
 
     @pandas_udf("bigint")
@@ -559,25 +524,6 @@ def simhash(text: Column, n: int = 3) -> Column:
         return pd.Series(out)
 
     return _fp(text)
-
-
-def simhash_expr(text: Column, n: int = 3) -> Column:
-    """Pure-Catalyst variant of ``simhash`` — kept for plan-purity
-    comparison; see simhash for why it is not the default."""
-    hs = shingle_hashes60(text, n)
-
-    def vote(b: int):
-        return lambda acc, x: acc + (
-            F.shiftright(x, b).bitwiseAND(F.lit(1)) * 2 - 1
-        ).cast("int")
-
-    bit_votes = [
-        F.aggregate(hs, F.lit(0), vote(b)) for b in range(SIMHASH_BITS)
-    ]
-    out = F.lit(0).cast("bigint")
-    for b, vote in enumerate(bit_votes):
-        out = out + F.when(vote > 0, F.lit(1 << b).cast("bigint")).otherwise(F.lit(0))
-    return out
 
 
 def simhash_sql(expr: str, n: int = 3) -> str:

@@ -9,13 +9,15 @@ Spark-first physical strategy:
   driver merge. O(N) work, O(partitions·k) merge, NO global sort and NO
   shuffle of all rows. This scales linearly with executors; the reference
   does an O(N log N) single-threaded sort (collection.go:98-103).
-- **batch of queries** → broadcast the (small) query set, one scan of the
-  big table computes every (query, record) score, ``row_number()`` window
-  partitioned by query keeps k each. One pass over the data regardless of
-  the number of queries — the scan cost is amortized across the batch.
-- **all-pairs similarity join** → same shape with both sides potentially
-  large; the LSH/IVF variants in ``operators.ann`` cut the candidate set
-  at scale.
+- **batch of queries** → the (small) query set is collected into a
+  ``mapInPandas`` closure, one scan of the big table scores every
+  record against all queries at once (``kernels.cosine_block``), and
+  ``bucketed_topk``'s two-stage window keeps k per query. One pass over
+  the data regardless of the number of queries — the scan cost is
+  amortized across the batch.
+- **all-pairs similarity join** → the left side is broadcast into a
+  cross join with the right; the LSH/IVF variants in ``operators.ann``
+  cut the candidate set at scale.
 
 Tie semantics: ``limit``/``row_number`` keep an arbitrary subset of rows
 tied at the k-th score — exactly k rows out, matching the reference's
@@ -29,35 +31,25 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from go_simple_embedding_database_spark.functions.kernels import (
-    cosine_pairs_kernel, cosine_scores_kernel)
+    cosine_block, cosine_pairs_kernel, cosine_scores_kernel)
 
 
 def _record_form_scores(records, queries, records_vec: str,
                         queries_vec: str, query_id: str, records_id: str,
                         score_col: str, tie_cols: list[str]):
     """(query_id, records_id, score, *tie_cols) for EVERY (record, query)
-    pair — the slim scored relation of batch_topk's record form. Each
-    record row enters the Python worker once; scores against the M
-    closure queries are computed with the EXACT per-pair op sequence of
-    ``cosine_similarity`` (strict left fold per dim, vectorized across
-    rows AND queries; den-before-dot on length mismatch; zero-norm → 0.0;
-    NULL vector → NULL; NULL element → NaN per the kernel contract —
-    Arrow renders a record-side NULL element NaN before the fold, and a
-    query-side one is mapped to NaN here)."""
+    pair — the slim scored relation of batch_topk. The query batch is
+    collected into the mapInPandas closure and each record row enters
+    the Python worker once; ``kernels.cosine_block`` scores it against
+    all M queries with the exact per-pair semantics of
+    ``cosine_pairs_kernel`` (Arrow renders a record-side NULL element
+    NaN before the fold, and the block maps a query-side one to NaN)."""
     import numpy as np
     import pandas as pd
 
-    from go_simple_embedding_database_spark.functions.kernels import (
-        _fold_norm_block, _stack_f64)
-
     q_rows = queries.select(query_id, queries_vec).collect()
     qids = [r[0] for r in q_rows]
-    qvecs = [None if r[1] is None else
-             np.asarray([float("nan") if v is None else float(v)
-                         for v in r[1]], dtype=np.float64)
-             for r in q_rows]
-    qnorm = [None if q is None else _fold_norm_block(q.reshape(1, -1))[0]
-             for q in qvecs]
+    qvecs = [r[1] for r in q_rows]
     m = len(qids)
     in_cols = list(dict.fromkeys([records_id, records_vec] + tie_cols))
     keep_cols = [c for c in in_cols if c != records_vec]
@@ -65,42 +57,7 @@ def _record_form_scores(records, queries, records_vec: str,
     def score_batches(batches):
         for pdf in batches:
             n = len(pdf)
-            xv = pdf[records_vec].to_numpy()
-            vals = np.zeros((n, m), dtype=np.float64)
-            mask = np.zeros((n, m), dtype=bool)
-            groups: dict[int, list[int]] = {}
-            null_rows: list[int] = []
-            for i in range(n):
-                if xv[i] is None:
-                    null_rows.append(i)
-                else:
-                    groups.setdefault(len(xv[i]), []).append(i)
-            if null_rows:
-                mask[np.asarray(null_rows), :] = True
-            for dx, idxs in groups.items():
-                ii = np.asarray(idxs)
-                X = _stack_f64([xv[i] for i in idxs])
-                # record-side norms: one fold per record, bit-identical
-                # to the per-pair fold (deterministic op sequence)
-                nxs = _fold_norm_block(X)
-                for j, q in enumerate(qvecs):
-                    if q is None:
-                        mask[ii, j] = True
-                    elif len(q) != dx:
-                        # den-before-dot mismatch rule (kernels module)
-                        den = nxs * qnorm[j]
-                        zero = den == 0.0
-                        vals[ii[zero], j] = 0.0
-                        mask[ii[~zero], j] = True
-                    else:
-                        dot = np.zeros(len(ii))
-                        for d in range(dx):
-                            dot = dot + X[:, d] * q[d]
-                        den = nxs * qnorm[j]
-                        with np.errstate(divide="ignore",
-                                         invalid="ignore"):
-                            vals[ii, j] = np.where(den == 0.0, 0.0,
-                                                   dot / den)
+            vals, mask = cosine_block(pdf[records_vec].to_numpy(), qvecs)
             rep = np.repeat(np.arange(n), m)
             out = pdf[keep_cols].iloc[rep].reset_index(drop=True)
             out[query_id] = pd.Series(qids * n, dtype=object) \
@@ -122,25 +79,25 @@ def _record_form_scores(records, queries, records_vec: str,
             .mapInPandas(score_batches, ", ".join(fields)))
 
 
-def bucketed_topk(scored: DataFrame, group_col: str, order: list[Column],
-                  k: int, bucket_key: str,
-                  buckets: int | None = None) -> DataFrame:
+def bucketed_topk(scored: DataFrame, group_cols: list[str],
+                  order: list[Column], k: int, bucket_key: str) -> DataFrame:
     """Exact per-group top-k as a TWO-stage bucketed window — THE shared
-    primitive under ``batch_topk``, ``similarity_join`` and the ANN batch
-    probe. Stage 1 partitions by (group, bucket) so one group's candidate
-    rows never funnel through a single task (a plain
-    ``partitionBy(group)`` window is the canonical straggler/OOM at the
-    100 TB design point — AQE cannot split a window partition); stage 2
-    re-ranks the surviving ``buckets × k`` rows per group. Global top-k ⊆
-    union of per-bucket top-k, and callers pass a TOTAL ``order``
-    (score desc + unique tie-break asc), so the result is identical to
-    the single-window formulation.
+    primitive under ``batch_topk``, ``similarity_join``, the ANN batch
+    probe and ``sampling.weighted_sample``. Stage 1 partitions by
+    (group, bucket) so one group's candidate rows never funnel through a
+    single task (a plain ``partitionBy(group)`` window is the canonical
+    straggler/OOM at the 100 TB design point — AQE cannot split a window
+    partition); stage 2 re-ranks the surviving ``buckets × k`` rows per
+    group. There is one bucket per default-parallelism slot. Global
+    top-k ⊆ union of per-bucket top-k, and callers pass a TOTAL
+    ``order`` (score desc + unique tie-break asc), so the result is
+    identical to the single-window formulation.
 
     ``bucket_key`` is a unique-ish column hashed (crc32) into the stage-1
     bucket — deterministic, so reruns bucket identically."""
-    nb = buckets or scored.sparkSession.sparkContext.defaultParallelism
-    w1 = Window.partitionBy(group_col, "_b").orderBy(*order)
-    w2 = Window.partitionBy(group_col).orderBy(*order)
+    nb = scored.sparkSession.sparkContext.defaultParallelism
+    w1 = Window.partitionBy(*group_cols, "_b").orderBy(*order)
+    w2 = Window.partitionBy(*group_cols).orderBy(*order)
     return (
         scored.withColumn("_b", F.crc32(F.col(bucket_key).cast("string")) % nb)
         .withColumn("_rn", F.row_number().over(w1))
@@ -177,79 +134,53 @@ def batch_topk(
     records: DataFrame,
     queries: DataFrame,
     k: int,
+    records_id: str,
     records_vec: str = "embedding",
     queries_vec: str = "query_embedding",
     query_id: str = "query_id",
     score_col: str = "score",
     tie_break: list[str] | None = None,
-    records_id: str | None = None,
-    buckets: int | None = None,
     attach_payload: bool = True,
 ) -> DataFrame:
     """Top-k per query for a whole DataFrame of queries in ONE scan.
 
-    The query side rides with every task (queries are small by
-    construction — the working set of a request batch). With
-    ``records_id`` the collected query batch travels in a mapInPandas
-    closure and each record VECTOR enters the scoring stage exactly once
-    for all M queries (``_record_form_scores``); tie columns that live on
-    the query side are broadcast-joined onto the scored relation by
-    ``query_id``. Without ``records_id`` the queries are broadcast and a
-    cross join materializes M pair rows per record. The big records
-    table is scanned once in both.
+    ``records_id`` is a unique record key. The query side is small by
+    construction (the working set of a request batch): it is collected
+    into a mapInPandas closure and each record VECTOR enters the scoring
+    stage exactly once for all M queries (``_record_form_scores``); tie
+    columns that live on the query side are broadcast-joined onto the
+    scored relation by ``query_id``. The big records table is scanned
+    once and never cross-joined.
 
-    The per-query selection is a TWO-stage window: stage 1 partitions by
-    (query, bucket) so every query's candidates spread over
-    ``buckets`` tasks (a single ``partitionBy(query_id)`` window would
-    funnel ALL N scored rows of a query through one task — an OOM/straggler
-    at the 100 TB design point; AQE cannot split a window partition);
-    stage 2 re-ranks the surviving ``buckets × k`` rows per query — tiny.
-    Global top-k ⊆ union of per-bucket top-k, so the result is identical.
-    ``row_number`` (not ``rank``) reproduces exactly-k-with-arbitrary-ties.
+    The per-query selection is ``bucketed_topk``'s TWO-stage window:
+    stage 1 partitions by (query, bucket) so a query's N scored rows
+    never funnel through one task (an OOM/straggler at the 100 TB design
+    point; AQE cannot split a window partition), stage 2 re-ranks the
+    surviving ``buckets × k`` rows per query. ``row_number`` (not
+    ``rank``) reproduces exactly-k-with-arbitrary-ties.
 
-    With ``records_id`` (a unique record key) the shuffle carries only
-    (query_id, id, score, tie columns) — the record payload (embedding
-    included) is re-attached afterwards by broadcasting the k×|queries|
-    winners against the records table: the wide columns are never
-    shuffled at all. Pass it at scale; the default path shuffles whole
-    scored rows, acceptable when the payload is narrow.
+    The shuffle carries only (query_id, records_id, score, tie columns);
+    the record payload (embedding included) is re-attached afterwards by
+    broadcasting the k×|queries| winners against the records table, so
+    the wide columns are never shuffled at all.
 
-    ``attach_payload=False`` (only meaningful with ``records_id``) skips
-    that re-attach join and returns the slim winners
-    (query_id, records_id, score, tie columns) directly — for callers
-    that only consume ids/scores (recall evaluation), the payload join
-    is a whole extra corpus scan Catalyst cannot prune away (an inner
-    join is not removable even when its columns go unused).
+    ``attach_payload=False`` skips that re-attach join and returns the
+    slim winners (query_id, records_id, score, tie columns) directly —
+    for callers that only consume ids/scores (recall evaluation), the
+    payload join is a whole extra corpus scan Catalyst cannot prune away
+    (an inner join is not removable even when its columns go unused).
     """
     order = [F.desc(score_col)] + [F.asc(c) for c in (tie_break or [])]
-    nb = buckets or records.sparkSession.sparkContext.defaultParallelism
-
-    if records_id is None:
-        joined = records.crossJoin(F.broadcast(queries))
-        scored = joined.withColumn(
-            score_col,
-            cosine_pairs_kernel(F.col(records_vec), F.col(queries_vec)))
-        w1 = Window.partitionBy(query_id, "_b").orderBy(*order)
-        w2 = Window.partitionBy(query_id).orderBy(*order)
-        pre = (scored.withColumn("_b", F.spark_partition_id() % nb)
-               .withColumn("_rn", F.row_number().over(w1))
-               .filter(F.col("_rn") <= k).drop("_rn", "_b"))
-        return (pre.withColumn("_rn", F.row_number().over(w2))
-                .filter(F.col("_rn") <= k)
-                .drop("_rn", queries_vec))
-
     tie_cols = tie_break or []
     record_ties = [c for c in tie_cols if c in records.columns]
     query_ties = [c for c in tie_cols
                   if c not in records.columns and c != query_id]
-    # Record form (§8): each record vector enters the scoring stage ONCE
-    # for all M queries instead of M times as cross-joined pair rows.
     slim = _record_form_scores(records, queries, records_vec, queries_vec,
                                query_id, records_id, score_col, record_ties)
     if query_ties:
         slim = slim.join(F.broadcast(queries.select(query_id, *query_ties)),
                          query_id)
-    winners = bucketed_topk(slim, query_id, order, k, records_id, nb)
+    winners = bucketed_topk(slim, [query_id], order, k, records_id)
     if not attach_payload:
         return winners
     out = records.join(
@@ -271,8 +202,6 @@ def similarity_join(
     left_id: str = "id",
     right_id: str = "id",
     score_col: str = "score",
-    broadcast_side: str = "left",
-    buckets: int | None = None,
 ) -> DataFrame:
     """All-pairs cosine join: for each left row, its matches on the right.
 
@@ -285,31 +214,17 @@ def similarity_join(
     correctness oracle. The scale path is ``operators.ann`` (LSH bucketing
     / IVF cells) which feeds candidate pairs into the same scoring.
 
-    Broadcast orientation: the k-NN join shape is "few queries (left) ×
-    huge corpus (right)", so the DEFAULT broadcasts the LEFT side — the
-    corpus is scanned in place, never shuffled and never collected to the
-    driver (a broadcast of the big side is the 100 TB OOM). Broadcasting
-    the right side is opt-in (``broadcast_side="right"``) for the mirrored
-    case of a small reference set; ``broadcast_side=None`` leaves the
-    planner free (local tests of the pure semantics).
+    The k-NN join shape is "few queries (left) × huge corpus (right)", so
+    the LEFT side is broadcast: the corpus is scanned in place, never
+    shuffled and never collected to the driver (a broadcast of the big
+    side is the 100 TB OOM).
 
-    The per-left top-k is the same TWO-stage bucketed window as
-    ``batch_topk``: stage 1 partitions by (left_id, bucket) so one query's
-    candidates never funnel through a single task, stage 2 re-ranks the
-    surviving buckets × k rows. Global top-k ⊆ union of per-bucket top-k,
-    and the (score desc, right_id asc) order is total, so the result is
-    identical to the single-window formulation.
+    The per-left top-k is ``bucketed_topk``'s two-stage window with the
+    total order (score desc, right_id asc), so the result is identical
+    to the single-window formulation.
     """
-    if broadcast_side not in ("left", "right", None):
-        raise ValueError(
-            f"broadcast_side must be 'left', 'right' or None, got {broadcast_side!r}")
     lv, rv = F.col("_l." + left_vec), F.col("_r." + right_vec)
-    if broadcast_side == "left":
-        pairs = right.alias("_r").crossJoin(F.broadcast(left.alias("_l")))
-    elif broadcast_side == "right":
-        pairs = left.alias("_l").crossJoin(F.broadcast(right.alias("_r")))
-    else:
-        pairs = left.alias("_l").crossJoin(right.alias("_r"))
+    pairs = right.alias("_r").crossJoin(F.broadcast(left.alias("_l")))
     scored = pairs.select(
         F.col("_l." + left_id).alias("left_id"),
         F.col("_r." + right_id).alias("right_id"),
@@ -319,6 +234,6 @@ def similarity_join(
         scored = scored.filter(F.col(score_col) >= threshold)
     if k is not None:
         scored = bucketed_topk(
-            scored, "left_id", [F.desc(score_col), F.asc("right_id")], k,
-            "right_id", buckets)
+            scored, ["left_id"], [F.desc(score_col), F.asc("right_id")], k,
+            "right_id")
     return scored

@@ -294,9 +294,8 @@ def test_ivf_index_empty_source_queries_empty(spark, embeddings, tmp_path):
                        .alias("query_embedding"))
     assert ann.ivf_query_index_batch(spark, path, qset, 5).count() == 0
     # NON-empty batch against the empty index: the short-circuit decides
-    # "nothing probeable" from |C| = 0 alone — before the capped query
-    # collect, which with |C| = 0 would degenerate to max_q = budget and
-    # pull the whole batch just to return nothing (ADVICE r05)
+    # "nothing probeable" from |C| = 0 alone, before collecting the
+    # query batch (ADVICE r05)
     live = embeddings.select(F.col("vec_id").alias("query_id"),
                              F.col("embedding").cast("array<double>")
                              .alias("query_embedding")).limit(7)
@@ -317,14 +316,11 @@ def test_quantized_index_empty_source_queries_empty(spark, embeddings,
 
 
 def test_ivf_batch_driver_and_spark_ranking_agree(spark, tmp_path):
-    """The scale gate (ann.IVF_DRIVER_RANK_MAX_OPS): a 1k-centroid index
-    crosses what the driver should rank in pure Python at a real batch
-    size, so ivf_query_index_batch falls back to Spark batch_topk for
-    the centroid ranking. The fallback must be BIT-IDENTICAL to the
-    driver path (same kernel fold, same score-desc/centroid_id-asc tie
-    order => same probe cells => same rows), pinned here by running the
-    same batch under both budgets against a synthetic 1,000-centroid
-    index."""
+    """A 1,000-centroid index: the batch path ranks every centroid
+    against the batch on the driver (``kernels.cosine_block``), the
+    per-query path ranks them with a Spark top-k. Same kernel fold, same
+    score-desc/centroid_id-asc tie order => same probe cells => same
+    rows, bit for bit."""
     import numpy as np
 
     rng = np.random.default_rng(23)
@@ -341,45 +337,65 @@ def test_ivf_batch_driver_and_spark_ranking_agree(spark, tmp_path):
     qset = (emb.filter(F.col("vec_id") < 6)
             .select(F.col("vec_id").alias("query_id"),
                     F.col("embedding").alias("query_embedding")))
-    # driver path: 1000 * 6 * 8 = 48k element-ops, under the default gate
-    driver = ann.ivf_query_index_batch(spark, path, qset, 5, nprobe=3)
-    # forced fallback: budget 0 pushes the ranking through batch_topk
-    sparkside = ann.ivf_query_index_batch(spark, path, qset, 5, nprobe=3,
-                                          driver_rank_max_ops=0)
-    d = sorted((r.query_id, r.vec_id, r.score) for r in driver.collect())
-    s = sorted((r.query_id, r.vec_id, r.score) for r in sparkside.collect())
-    assert d == s and len(d) > 0
-    # and both equal the per-query reference path
+    batch = ann.ivf_query_index_batch(spark, path, qset, 5, nprobe=3)
+    got = sorted((r.query_id, r.vec_id, r.score) for r in batch.collect())
     want = []
     by_id = dict(vecs)
     for qid in range(6):
         for r in ann.ivf_query_index(spark, path, by_id[qid], 5,
                                      nprobe=3).collect():
             want.append((qid, r.vec_id, r.score))
-    assert d == sorted(want)
-    # the documented default gate really is |C|*|Q|*dim element-ops
-    assert 1000 * 6 * dim < ann.IVF_DRIVER_RANK_MAX_OPS
-    assert 1000 * 1000 * 64 > ann.IVF_DRIVER_RANK_MAX_OPS
+    assert got == sorted(want) and len(got) > 0
 
 
-def test_ivf_batch_capped_collect_overflow_falls_back(spark, embeddings,
-                                                      centroids, tmp_path):
-    """The gate bounds what the driver MATERIALIZES, not just what it
-    computes: with a budget admitting only 2 queries, a 4-query batch
-    must overflow the capped limit-collect and take the Spark ranking —
-    returning exactly the unlimited driver path's rows."""
-    path = str(tmp_path / "ivfcap")
-    ann.ivf_write_index(embeddings, centroids, path)
-    emb = embeddings.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding"))
-    qset = (emb.filter(F.col("vec_id").isin([3, 7, 11, 19]))
-            .select(F.col("vec_id").alias("query_id"),
-                    F.col("embedding").alias("query_embedding")))
-    dim = len(emb.first().embedding)
-    n_cent = spark.read.parquet(f"{path}/centroids").count()
-    two_q_budget = 2 * n_cent * dim            # max_q == 2 < 4 queries
-    capped = ann.ivf_query_index_batch(spark, path, qset, 10, nprobe=2,
-                                       driver_rank_max_ops=two_q_budget)
-    full = ann.ivf_query_index_batch(spark, path, qset, 10, nprobe=2)
-    assert sorted((r.query_id, r.vec_id, r.score) for r in capped.collect()) \
-        == sorted((r.query_id, r.vec_id, r.score) for r in full.collect())
+def test_ivf_batch_ranks_malformed_rows_like_spark(spark, tmp_path):
+    """The driver-side centroid ranking reproduces Spark's
+    ``desc(score), asc(centroid_id)`` order over malformed input: a
+    NaN-element centroid (NaN ranks first), a NULL centroid (NULL ranks
+    last), a zero-norm centroid (0.0), a -0.0 score tied with 0.0, exact
+    score ties, and queries with a NULL element, the wrong dimension or
+    no vector at all. The expected order is a Spark cross join scored by
+    ``cosine_pairs_kernel``. The batch query over such an index returns
+    rows instead of raising while the DataFrame is built."""
+    from pyspark.sql import Window
+
+    from go_simple_embedding_database_spark.functions.kernels import (
+        cosine_pairs_kernel)
+
+    # against query 6, centroid 4 scores -0.0 (the quotient underflows)
+    # and ties with the 0.0 of centroids 2 (orthogonal) and 7 (zero norm)
+    cents = [(5, [1.0, 0.5, -0.25, 2.0]), (2, [0.0, 1.0, 0.0, 0.0]),
+             (9, [float("nan"), 1.0, 0.0, 0.0]), (0, None),
+             (7, [0.0, 0.0, 0.0, 0.0]), (3, [-1.0, 0.25, 0.5, 0.0]),
+             (8, [1.0, 0.5, -0.25, 2.0]), (1, [0.5, -2.0, 1.0, 1.0]),
+             (4, [-1e-300, 1e30, 0.0, 0.0])]
+    queries = [(0, [1.0, 0.5, -0.25, 2.0]), (1, [0.0, 0.0, 1.0, 0.0]),
+               (2, [1.0, None, 0.0, 0.0]), (3, [1.0, 0.0]), (4, None),
+               (5, [-1.0, 0.25, 0.5, 0.0]), (6, [1.0, 0.0, 0.0, 0.0])]
+    cent_df = spark.createDataFrame(
+        cents, "centroid_id int, centroid array<double>")
+    qset = spark.createDataFrame(
+        queries, "query_id long, query_embedding array<double>")
+
+    w = Window.partitionBy("query_id").orderBy(F.desc("s"),
+                                               F.asc("centroid_id"))
+    ranked = (qset.crossJoin(cent_df)
+              .withColumn("s", cosine_pairs_kernel(F.col("centroid"),
+                                                   F.col("query_embedding")))
+              .withColumn("rn", F.row_number().over(w))
+              .orderBy("query_id", "rn").collect())
+    want = [(r.query_id, r.centroid_id) for r in ranked]
+    got = ann._rank_probe_pairs(cent_df.collect(), qset.collect(),
+                                len(cents), "query_id", "query_embedding")
+    assert got == want
+
+    emb = spark.createDataFrame(
+        [(i, [float(i % 3), 1.0, float(i % 5) - 2.0, 0.5])
+         for i in range(40)], "vec_id int, embedding array<double>")
+    path = str(tmp_path / "ivf_malformed")
+    ann.ivf_write_index(emb, cent_df, path)
+    out = ann.ivf_query_index_batch(spark, path, qset, 3,
+                                    nprobe=len(cents))
+    counts = {r.query_id: r.n for r in
+              out.groupBy("query_id").agg(F.count("*").alias("n")).collect()}
+    assert counts == {q: 3 for q, _ in queries}

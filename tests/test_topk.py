@@ -39,7 +39,8 @@ def test_batch_topk_exact_k_per_query(spark, embeddings):
     queries = (embeddings.filter(F.col("vec_id") < 3)
                .select(F.col("vec_id").alias("query_id"),
                        F.col("embedding").alias("query_embedding")))
-    out = batch_topk(embeddings, queries, 4, tie_break=["vec_id"])
+    out = batch_topk(embeddings, queries, 4, tie_break=["vec_id"],
+                     records_id="vec_id")
     counts = {r.query_id: r.n for r in
               out.groupBy("query_id").agg(F.count("*").alias("n")).collect()}
     assert counts == {0: 4, 1: 4, 2: 4}
@@ -48,12 +49,16 @@ def test_batch_topk_exact_k_per_query(spark, embeddings):
     assert firsts.count() == 3
 
 
-def test_batch_topk_broadcasts_queries(spark, embeddings):
+def test_batch_topk_plans_no_cross_join(spark, embeddings):
+    """The query batch rides in the scorer's closure: the records table
+    is never cross-joined with the queries."""
     queries = (embeddings.limit(3)
                .select(F.col("vec_id").alias("query_id"),
                        F.col("embedding").alias("query_embedding")))
-    df = batch_topk(embeddings, queries, 2)
-    assert "BroadcastNestedLoopJoin" in formatted_plan(df) or "BroadcastExchange" in formatted_plan(df)
+    plan = formatted_plan(batch_topk(embeddings, queries, 2,
+                                     records_id="vec_id"))
+    assert "CartesianProduct" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan
 
 
 def test_similarity_join_threshold_and_k(spark, embeddings):
